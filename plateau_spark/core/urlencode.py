@@ -79,6 +79,21 @@ def decode_value(raw: str, dtype: T.DataType | None) -> Any:
     return value
 
 
+# Characters Spark escapes in hive directory names
+# (ExternalCatalogUtils.charToEscape on a non-Windows host): ASCII
+# control characters and ``"#%'*/:=?\\{[]^`` plus DEL, as ``%XX``.
+_HIVE_ESCAPE = frozenset(
+    [chr(c) for c in range(0x01, 0x20)] + list("\"#%'*/:=?\\\x7f{[]^")
+)
+
+
+def escape_path_name(name: str) -> str:
+    """A hive directory component exactly as Spark's
+    ``ExternalCatalogUtils.escapePathName`` spells it; ``decode_value``
+    (``unquote``) inverts it."""
+    return "".join(f"%{ord(c):02X}" if c in _HIVE_ESCAPE else c for c in name)
+
+
 def decode_partition_label(
     label: str,
     partition_keys: Sequence[str],

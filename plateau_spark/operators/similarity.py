@@ -2132,107 +2132,110 @@ def build_ivfpq_index(
     # before the full-corpus encode/store pass below.
     fit_pins: list[DataFrame] = []
     resid_pin: DataFrame | None = None
+    _pool = None
     try:
-        if centroids is None or pq_model is None:
-            fit_src = fit_src.select(F.col(id_col), F.col(vec_col)).persist()
-            fit_pins.append(fit_src)
-        # centroids= / pq_model= pin a pre-fit (or externally trained)
-        # model: the fit stages are skipped entirely and only the
-        # assignment/encode/store plan runs — the fit-once/reuse-many
-        # deployment shape, and the hook that makes the serving path
-        # SQL-oracle-verifiable (entry query embedding_ivfpq_pinned).
-        if centroids is None:
-            centroids = ivf_centroids(
-                fit_src, id_col=id_col, vec_col=vec_col,
-                n_centroids=n_centroids, refine_iterations=refine_iterations,
-            )
-        cent = _centroid_df(spark, centroids)
-
-        def _residuals(frame):
-            return (
-                _assign_to_centroids(frame, vec_col, [id_col], centroids)
-                .join(F.broadcast(cent), "__cid__")
-                .select(
-                    F.col("__cid__").alias("cell"),
-                    F.col(id_col),
-                    F.zip_with(
-                        F.col(vec_col), F.col("__cvec__"),
-                        lambda a, b: a.cast("double") - b,
-                    ).alias("__res__"),
+        try:
+            if centroids is None or pq_model is None:
+                fit_src = fit_src.select(F.col(id_col), F.col(vec_col)).persist()
+                fit_pins.append(fit_src)
+            # centroids= / pq_model= pin a pre-fit (or externally trained)
+            # model: the fit stages are skipped entirely and only the
+            # assignment/encode/store plan runs — the fit-once/reuse-many
+            # deployment shape, and the hook that makes the serving path
+            # SQL-oracle-verifiable (entry query embedding_ivfpq_pinned).
+            if centroids is None:
+                centroids = ivf_centroids(
+                    fit_src, id_col=id_col, vec_col=vec_col,
+                    n_centroids=n_centroids, refine_iterations=refine_iterations,
                 )
-            )
+            cent = _centroid_df(spark, centroids)
 
-        if pq_model is not None:
-            model = pq_model
-        else:
-            resid_fit = _residuals(fit_src).persist()
-            fit_pins.append(resid_fit)
-            # Overlap the full-corpus residual materialization with the
-            # PQ fit (guide §2.6: overlap independent jobs): the
-            # residuals depend only on the coarse centroids — known by
-            # now — while the fit's seed/Lloyd collects run sample-
-            # scale driver-blocking jobs that leave the cluster mostly
-            # idle. Size-gated off the optimizer byte estimate (the
-            # pinned residual frame is corpus-scale; at 100 TB the gate
-            # keeps this a fit-phase no-op and the encode below streams
-            # the residuals exactly as before). When fit_corpus is None
-            # the fit ALREADY pinned the corpus residuals (fit_src IS
-            # corpus) — reuse that pin for the encode instead of
-            # re-running the assignment GEMM + centroid join.
-            if fit_corpus is None:
-                resid_pin = resid_fit
-            else:
-                try:
-                    _est = int(
-                        corpus._jdf.queryExecution()
-                        .optimizedPlan().stats().sizeInBytes()
+            def _residuals(frame):
+                return (
+                    _assign_to_centroids(frame, vec_col, [id_col], centroids)
+                    .join(F.broadcast(cent), "__cid__")
+                    .select(
+                        F.col("__cid__").alias("cell"),
+                        F.col(id_col),
+                        F.zip_with(
+                            F.col(vec_col), F.col("__cvec__"),
+                            lambda a, b: a.cast("double") - b,
+                        ).alias("__res__"),
                     )
-                except Exception:  # noqa: BLE001 — stats unavailable: skip
-                    _est = None
-                _budget = env_int(
-                    "PLATEAU_SPARK_IVFPQ_RESID_PIN_BYTES", 1 << 30
                 )
-                if _est is not None and _est <= _budget:
-                    resid_pin = _residuals(corpus).persist()
-                    from concurrent.futures import ThreadPoolExecutor
 
-                    _pool = ThreadPoolExecutor(max_workers=1)
-                    _mat = _pool.submit(lambda: resid_pin.count())
-            model = fit_pq_model(
-                resid_fit, vec_col="__res__", m=m, k=pq_k,
-                refine_iterations=pq_refine_iterations, id_col=id_col,
-                # dim is fixed by the coarse centroids (residual =
-                # vector - centroid) — skip the LIMIT-1 inference scan
-                dim=len(centroids[0][1]) if centroids else None,
-            )
-            if resid_pin is not None and resid_pin is not resid_fit:
-                # surface materialization errors before the encode
-                # consumes the pin (the pin itself is correctness-free:
-                # unpersist only ever costs recompute)
-                _mat.result()
+            if pq_model is not None:
+                model = pq_model
+            else:
+                resid_fit = _residuals(fit_src).persist()
+                fit_pins.append(resid_fit)
+                # Overlap the full-corpus residual materialization with the
+                # PQ fit (guide §2.6: overlap independent jobs): the
+                # residuals depend only on the coarse centroids — known by
+                # now — while the fit's seed/Lloyd collects run sample-
+                # scale driver-blocking jobs that leave the cluster mostly
+                # idle. Size-gated off the optimizer byte estimate (the
+                # pinned residual frame is corpus-scale; at 100 TB the gate
+                # keeps this a fit-phase no-op and the encode below streams
+                # the residuals exactly as before). When fit_corpus is None
+                # the fit ALREADY pinned the corpus residuals (fit_src IS
+                # corpus) — reuse that pin for the encode instead of
+                # re-running the assignment GEMM + centroid join.
+                if fit_corpus is None:
+                    resid_pin = resid_fit
+                else:
+                    try:
+                        _est = int(
+                            corpus._jdf.queryExecution()
+                            .optimizedPlan().stats().sizeInBytes()
+                        )
+                    except Exception:  # noqa: BLE001 — stats unavailable: skip
+                        _est = None
+                    _budget = env_int(
+                        "PLATEAU_SPARK_IVFPQ_RESID_PIN_BYTES", 1 << 30
+                    )
+                    if _est is not None and _est <= _budget:
+                        resid_pin = _residuals(corpus).persist()
+                        from concurrent.futures import ThreadPoolExecutor
+
+                        _pool = ThreadPoolExecutor(max_workers=1)
+                        _mat = _pool.submit(lambda: resid_pin.count())
+                model = fit_pq_model(
+                    resid_fit, vec_col="__res__", m=m, k=pq_k,
+                    refine_iterations=pq_refine_iterations, id_col=id_col,
+                    # dim is fixed by the coarse centroids (residual =
+                    # vector - centroid) — skip the LIMIT-1 inference scan
+                    dim=len(centroids[0][1]) if centroids else None,
+                )
+                if resid_pin is not None and resid_pin is not resid_fit:
+                    # surface materialization errors before the encode
+                    # consumes the pin (the pin itself is correctness-free:
+                    # unpersist only ever costs recompute)
+                    _mat.result()
+        finally:
+            if _pool is not None:
+                # waits out an in-flight residual materialization
                 _pool.shutdown()
-    finally:
-        # the model is driver-side lists at this point — nothing lazy
-        # references the fit caches, so release them before the
-        # full-corpus encode pass (the encode pin, when taken, is
-        # released after the store write below)
-        for p in fit_pins:
-            if p is resid_pin:
-                continue  # reused for the encode; released below
-            try:
-                p.unpersist(False)
-            except Exception:  # noqa: BLE001 — release is best-effort
-                pass
-    resid = resid_pin if resid_pin is not None else _residuals(corpus)
-    # the cell rides THROUGH the encode pass: consuming resid twice
-    # (encode input + a cell re-join by id) re-ran the whole
-    # assignment GEMM + broadcast join per consumer and paid an extra
-    # id-keyed shuffle for a column resid already carried
-    with_cell = encode_pq(
-        resid, model, id_col=id_col, vec_col="__res__",
-        passthrough_cols=["cell"],
-    )
-    try:
+            # the model is driver-side lists at this point — nothing lazy
+            # references the fit caches, so release them before the
+            # full-corpus encode pass (the encode pin, when taken, is
+            # released after the store write below)
+            for p in fit_pins:
+                if p is resid_pin:
+                    continue  # reused for the encode; released below
+                try:
+                    p.unpersist(False)
+                except Exception:  # noqa: BLE001 — release is best-effort
+                    pass
+        resid = resid_pin if resid_pin is not None else _residuals(corpus)
+        # the cell rides THROUGH the encode pass: consuming resid twice
+        # (encode input + a cell re-join by id) re-ran the whole
+        # assignment GEMM + broadcast join per consumer and paid an extra
+        # id-keyed shuffle for a column resid already carried
+        with_cell = encode_pq(
+            resid, model, id_col=id_col, vec_col="__res__",
+            passthrough_cols=["cell"],
+        )
         return store_dataframe_as_dataset(
             spark, store, index_uuid,
             with_cell.select("cell", F.col(id_col), "pq_code"),
@@ -2250,6 +2253,7 @@ def build_ivfpq_index(
             },
         )
     finally:
+        # released on every exit, including a failed fit
         if resid_pin is not None:
             try:
                 resid_pin.unpersist(False)

@@ -1278,17 +1278,15 @@ def bpe_merge_candidates(
         .agg(F.sum("__wc__").alias("pair_count"))
         .where(F.col("pair_count") >= int(min_pair_count))
     )
-    ranked = counted.select(
+    # orderBy().limit() plans as TakeOrdered (a per-task top-k, then a
+    # merge of k rows per task), so the window only numbers k rows
+    order = [F.col("pair_count").desc(), F.col("pair").asc()]
+    top = counted.orderBy(*order).limit(int(k))
+    return top.select(
         "pair",
         "pair_count",
-        F.row_number()
-        .over(
-            Window.orderBy(F.col("pair_count").desc(), F.col("pair").asc())
-        )
-        .cast("int")
-        .alias("rank"),
+        F.row_number().over(Window.orderBy(*order)).cast("int").alias("rank"),
     )
-    return ranked.where(F.col("rank") <= int(k))
 
 
 def train_unigram_lm(

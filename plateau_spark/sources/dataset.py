@@ -10,7 +10,9 @@ commit (docs/spec/format_specification.rst:34-54).
 
 Write protocol (store_dataset_from_partitions,
 plateau/io_components/write.py:148-233):
-  1. executors write parquet files under ``<uuid>/table/`` (hive dirs)
+  1. executors write parquet files under ``<uuid>/table/`` (hive dirs);
+     a small frame already in driver memory is written by the driver
+     with pyarrow instead (``_write_files``)
   2. driver enumerates the new files, builds partitions + indexes
   3. driver puts the metadata JSON — readers never see step 1-2 state.
 
@@ -26,6 +28,10 @@ import posixpath
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Callable, Sequence
 
+import pyarrow as pa
+import pyarrow.compute as pc
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -53,12 +59,17 @@ from plateau_spark.core.utils import (
     validate_partition_keys,
 )
 from plateau_spark.sources.serializers import (
+    DRIVER_WRITE_TYPES,
+    HIVE_NULL_DIR,
     is_payload_file,
     read_files,
+    rows_to_arrow,
     write_staged,
+    write_staged_driver,
 )
 from plateau_spark.plans.index import (
     SecondaryIndex,
+    _driver_index_budget,
     merge_index_dataframes,
     persist_index_dataframe,
     remove_partitions_from_index_df,
@@ -331,9 +342,6 @@ def _commit_update_with_merge_locked(
     return latest
 
 
-_HIVE_NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
-
-
 def _contains_map_type(dt: T.DataType) -> bool:
     if isinstance(dt, T.MapType):
         return True
@@ -386,6 +394,74 @@ def _raise_null_partition_keys(
     )
 
 
+# Partition-key types the driver tier of ``_write_files`` writes: its
+# hive directory names match Spark's for these (data column types:
+# ``DRIVER_WRITE_TYPES``).
+_DRIVER_WRITE_KEY_TYPES = (
+    T.ByteType,
+    T.ShortType,
+    T.IntegerType,
+    T.LongType,
+    T.StringType,
+    T.DateType,
+)
+
+
+def _driver_resident_table(
+    guarded: DataFrame,
+    partition_on: Sequence[str],
+    *,
+    file_format: str,
+    bucketed: bool,
+) -> pa.Table | None:
+    """The rows of ``guarded`` as an Arrow table when the driver tier
+    applies, else None (the Spark write job runs instead).
+
+    The tier needs a parquet, unbucketed write of allowlisted types
+    whose OPTIMIZED plan is a ``LocalRelation`` (the rows already sit
+    in the driver JVM, so ``collect()`` runs no job) within the driver
+    byte budget. ``DataFrame.isLocal()`` is no gate: it checks the
+    analyzed plan, which ``normalize_dataframe``'s projections make
+    non-local. Optimizing the plan evaluates the CHECK filter over the
+    local rows, so a violation raises here — the caller classifies it.
+    A float column holding NaN goes to Spark too: pyarrow leaves NaN
+    out of the footer min/max, parquet-mr does not, and the zone maps
+    must not lose the NaN rows (Spark orders NaN above every value)."""
+    if file_format != "parquet" or bucketed:
+        return None
+    for f in guarded.schema.fields:
+        allowed = _DRIVER_WRITE_KEY_TYPES if f.name in partition_on else DRIVER_WRITE_TYPES
+        if type(f.dataType) not in allowed:
+            return None
+    try:
+        qe = guarded._jdf.queryExecution()
+        # only local leaves can optimize to a LocalRelation; checking
+        # them first spares every other write an extra optimizer pass
+        leaves = qe.analyzed().collectLeaves()
+        if any(
+            leaves.apply(i).getClass().getSimpleName() != "LocalRelation"
+            for i in range(leaves.size())
+        ):
+            return None
+        plan = qe.optimizedPlan()
+        if plan.getClass().getSimpleName() != "LocalRelation":
+            return None
+        if int(plan.stats().sizeInBytes()) > _driver_index_budget():
+            return None
+    except (AttributeError, Py4JError, PySparkException) as e:
+        # a CHECK violation propagates; a plan or statistic this
+        # session cannot expose (no ``_jdf`` on Spark Connect, a JVM
+        # error) selects the Spark path
+        if _CHECK_MARKER in str(e):
+            raise
+        return None
+    table = rows_to_arrow(guarded.collect(), guarded.schema)
+    for col in table.columns:
+        if pa.types.is_floating(col.type) and pc.any(pc.is_nan(col)).as_py():
+            return None
+    return table
+
+
 def _write_files(
     df: DataFrame,
     store: Store,
@@ -400,33 +476,55 @@ def _write_files(
     compress: bool = True,
     constraints: dict | None = None,
 ) -> list[Partition]:
-    """One Spark write job; returns the new Partition entries.
+    """Write ``df`` into a staging prefix, promote the files into
+    ``<uuid>/table/`` and return the new Partition entries. EVERY
+    dataset write path routes through here.
 
-    ``constraints``: CHECK constraints folded into the write job as a
-    ``raise_error`` filter (``_constraint_guard``) — a violation aborts
-    the job, the staging prefix is deleted, and
-    :class:`ConstraintViolationError` is raised before any commit.
-    EVERY dataset write path routes through here, so passing the loaded
-    ``meta.metadata["constraints"]`` gives each path enforcement with
-    zero extra jobs.
+    Two tiers write the staged files; everything after them is shared.
+      - Driver tier (``_driver_resident_table``): the rows are already
+        in driver memory — the optimized plan of the guarded frame is a
+        ``LocalRelation`` (``createDataFrame`` from Arrow or pandas)
+        within the driver byte budget (the ``plans/index`` driver-tier
+        budget), the format is parquet, the write is unbucketed, data
+        columns are integral/float/double/string/boolean/date and
+        partition keys integral/string/date. The rows are collected
+        once (no Spark job) and ``write_staged_driver`` writes one
+        snappy parquet file per key with pyarrow, in Spark's hive
+        layout. A micro-batch append then runs zero Spark jobs.
+      - Spark tier (``write_staged``): everything else, including
+        every input that reads files (compaction, upsert, delete,
+        merge, the streaming sink, the dedup store).
 
-    Shuffle strategy (shuffle_store_dask_partitions,
+    ``constraints``: CHECK constraints folded into the write as a
+    ``raise_error`` filter (``_constraint_guard``) — the Spark tier
+    evaluates it inside the write job, the driver tier while optimizing
+    the local plan. A violation deletes the staging prefix and raises
+    :class:`ConstraintViolationError` before any commit, with zero
+    extra jobs.
+
+    Shuffle strategy of the Spark tier (shuffle_store_dask_partitions,
     plateau/io/dask/_shuffle.py:41-153, re-expressed):
       - with buckets: repartition on (partition_on ⊕ hash-bucket) —
         guarantees ≤ num_buckets files per partition key while keeping
         each (key, bucket) in exactly one task (no tiny-file explosion).
       - else: repartition on partition_on → exactly one file per key
         (the reference's one-value-per-file primary-index guarantee).
+    ``sort_partitions_by`` sorts within each task AFTER the partition
+    keys: the writer needs its input ordered by the keys, and a sort
+    on the sort columns alone is replaced by the writer's own key sort.
     The pack/compress-payload-before-shuffle trick of the reference is
     unnecessary on Spark (Tungsten binary rows + lz4 shuffle compression).
 
-    File discovery: the job writes into a unique per-commit staging
+    File discovery: both tiers write into a unique per-commit staging
     prefix ``<uuid>/.staging/<commit-id>/`` (hive layout), then each
     file is renamed into ``<uuid>/table/`` with the commit id prefixed
     to its name. Listing touches ONLY the staging prefix — O(new
     files), never O(dataset files) — and concurrent writers can never
     claim each other's in-flight files (they stage under different
-    commit ids). Mirrors the reference's track-what-each-task-wrote
+    commit ids; ``garbage_collect_dataset(keep_staging=True)`` skips
+    the prefix). Null and empty-string keys land in
+    ``__HIVE_DEFAULT_PARTITION__`` directories and raise before
+    promotion. Mirrors the reference's track-what-each-task-wrote
     protocol (plateau/io_components/write.py:148-233).
 
     Driver-time bound: the staged→final renames are pure metadata ops
@@ -441,39 +539,35 @@ def _write_files(
 
     commit_id = _uuid.uuid4().hex[:16]
     staging = f"{dataset_uuid}/{naming.STAGING_DIR}/{commit_id}"
-
-    out = df
     partition_on = list(partition_on)
-    if num_buckets and bucket_by:
-        out = out.withColumn(
-            "__bucket__", F.pmod(F.xxhash64(*[F.col(c) for c in bucket_by]), F.lit(num_buckets))
-        )
-        # explicit partition count (REPARTITION_BY_NUM): AQE must not
-        # coalesce the shuffle — the writer emits one file per key per
-        # TASK, so coalescing distinct (key, bucket) groups into one task
-        # silently collapses the bucket split the caller asked for.
-        # num_buckets is a CAP, not an exact count: two buckets of one
-        # key can still hash-collide into the same task and merge; the
-        # 32× headroom over num_buckets makes that rare (p ≈ g²/2n for
-        # g groups over n tasks) without guaranteeing it — an exact
-        # split would need a custom RDD partitioner.
-        _n = max(_shuffle_partitions_conf(out.sparkSession), int(num_buckets) * 32)
-        out = out.repartition(_n, *(partition_on + ["__bucket__"])) if partition_on else out.repartition(
-            num_buckets, "__bucket__"
-        )
-        out = out.drop("__bucket__")
-    elif partition_on and repartition:
-        out = out.repartition(*partition_on)
-    if sort_partitions_by:
-        # disjoint row-group stats for better pushdown
-        # (sort_values_categorical, plateau/io_components/utils.py:399-410)
-        out = out.sortWithinPartitions(*sort_partitions_by)
-    out = _constraint_guard(out, constraints)
 
     try:
-        write_staged(
-            out, store.url(staging), partition_on, file_format=file_format, compress=compress
+        table = _driver_resident_table(
+            _constraint_guard(df, constraints),
+            partition_on,
+            file_format=file_format,
+            bucketed=bool(num_buckets and bucket_by),
         )
+        if table is not None:
+            write_staged_driver(
+                table, store, staging, partition_on, sort_by=sort_partitions_by
+            )
+        else:
+            write_staged(
+                _spark_write_frame(
+                    df,
+                    partition_on,
+                    sort_partitions_by=sort_partitions_by,
+                    num_buckets=num_buckets,
+                    bucket_by=bucket_by,
+                    repartition=repartition,
+                    constraints=constraints,
+                ),
+                store.url(staging),
+                partition_on,
+                file_format=file_format,
+                compress=compress,
+            )
     except Exception as e:  # noqa: BLE001 — classify then re-raise
         msg = str(e)
         if _CHECK_MARKER in msg:
@@ -492,7 +586,7 @@ def _write_files(
 
     key_types = {f.name: f.dataType for f in df.schema.fields if f.name in partition_on}
     staged = sorted(store.iter_keys(staging + "/"))
-    if any(_HIVE_NULL_DIR in key for key in staged):
+    if any(HIVE_NULL_DIR in key for key in staged):
         _raise_null_partition_keys(store, staging, partition_on)
 
     def _promote(key: str) -> Partition:
@@ -515,6 +609,48 @@ def _write_files(
         partitions = list(pool.map(_promote, payload_keys))
     store.delete(staging)  # leftover _SUCCESS marker etc.
     return partitions
+
+
+def _spark_write_frame(
+    df: DataFrame,
+    partition_on: list[str],
+    *,
+    sort_partitions_by: Sequence[str] | None,
+    num_buckets: int | None,
+    bucket_by: Sequence[str] | None,
+    repartition: bool,
+    constraints: dict | None,
+) -> DataFrame:
+    """The frame the Spark tier of ``_write_files`` writes: shuffled,
+    sorted and CHECK-guarded."""
+    out = df
+    if num_buckets and bucket_by:
+        out = out.withColumn(
+            "__bucket__", F.pmod(F.xxhash64(*[F.col(c) for c in bucket_by]), F.lit(num_buckets))
+        )
+        # explicit partition count (REPARTITION_BY_NUM): AQE must not
+        # coalesce the shuffle — the writer emits one file per key per
+        # TASK, so coalescing distinct (key, bucket) groups into one task
+        # silently collapses the bucket split the caller asked for.
+        # num_buckets is a CAP, not an exact count: two buckets of one
+        # key can still hash-collide into the same task and merge; the
+        # 32× headroom over num_buckets makes that rare (p ≈ g²/2n for
+        # g groups over n tasks) without guaranteeing it — an exact
+        # split would need a custom RDD partitioner.
+        _n = max(_shuffle_partitions_conf(out.sparkSession), int(num_buckets) * 32)
+        out = out.repartition(_n, *(partition_on + ["__bucket__"])) if partition_on else out.repartition(
+            num_buckets, "__bucket__"
+        )
+        out = out.drop("__bucket__")
+    elif partition_on and repartition:
+        out = out.repartition(*partition_on)
+    if sort_partitions_by:
+        # disjoint row-group stats for better pushdown
+        # (sort_values_categorical, plateau/io_components/utils.py:399-410);
+        # keys first, so the writer keeps this order instead of adding
+        # its own sort on the keys alone
+        out = out.sortWithinPartitions(*partition_on, *sort_partitions_by)
+    return _constraint_guard(out, constraints)
 
 
 def _resolve_metadata(md):

@@ -25,17 +25,29 @@ and readers dispatch per file. Formats:
 
 Reading is still one distributed plan: surviving partition files are
 grouped by format, each group becomes one scan, groups union —
-Catalyst handles each source's pushdown independently.
+Catalyst handles each source's pushdown independently. Writing is one
+Spark job (``write_staged``), or, for parquet rows already in driver
+memory, its pyarrow twin ``write_staged_driver``.
 """
 
 from __future__ import annotations
 
+import datetime
+import io
+import posixpath
+import uuid
 from functools import reduce
 from typing import Sequence
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql import types as T
 
 from plateau_spark.core import naming
+from plateau_spark.core.store import Store
+from plateau_spark.core.urlencode import escape_path_name
 
 CSV_OPTIONS = {"sep": ";", "header": "true", "encoding": "UTF-8"}
 
@@ -89,6 +101,95 @@ def write_staged(
         writer.option("compression", "snappy" if compress else "none").orc(url)
     else:
         raise ValueError(f"Unsupported file_format: {file_format!r}")
+
+
+# Spark SQL type -> Arrow type of every column type the driver tier
+# writes: types whose collected Python values pyarrow stores exactly as
+# Spark would. Timestamps stay on Spark (``collect()`` returns naive
+# process-local datetimes); decimal, binary and nested types have no
+# parity test.
+DRIVER_WRITE_TYPES = {
+    T.ByteType: pa.int8(),
+    T.ShortType: pa.int16(),
+    T.IntegerType: pa.int32(),
+    T.LongType: pa.int64(),
+    T.FloatType: pa.float32(),
+    T.DoubleType: pa.float64(),
+    T.StringType: pa.string(),
+    T.BooleanType: pa.bool_(),
+    T.DateType: pa.date32(),
+}
+
+HIVE_NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
+
+
+def rows_to_arrow(rows: Sequence, schema: T.StructType) -> pa.Table:
+    """Collected Spark rows → an Arrow table of ``schema``."""
+    fields = [
+        pa.field(f.name, DRIVER_WRITE_TYPES[type(f.dataType)], f.nullable)
+        for f in schema.fields
+    ]
+    columns = list(zip(*rows)) if rows else [()] * len(fields)
+    return pa.table(
+        [pa.array(col, type=f.type) for col, f in zip(columns, fields)],
+        schema=pa.schema(fields),
+    )
+
+
+def _hive_dir_value(value) -> str:
+    if value is None or value == "":
+        return HIVE_NULL_DIR  # Spark writes null and "" keys here
+    if isinstance(value, datetime.date):
+        return value.isoformat()
+    return escape_path_name(str(value))
+
+
+def write_staged_driver(
+    table: pa.Table,
+    store: Store,
+    staging: str,
+    partition_on: Sequence[str],
+    *,
+    sort_by: Sequence[str] | None = None,
+) -> None:
+    """Driver twin of :func:`write_staged` for a frame whose rows are
+    already on the driver: one snappy parquet file per partition key,
+    written with pyarrow under the staging prefix in the hive layout a
+    Spark write would produce (same escaped directory names, key
+    columns in the path and not in the file, rows in input order or
+    sorted like ``sortWithinPartitions``). A keyless table is one
+    file, even when empty; an empty keyed table writes nothing."""
+    if sort_by:
+        table = table.take(
+            pc.sort_indices(
+                table,
+                sort_keys=[(c, "ascending") for c in sort_by],
+                null_placement="at_start",
+            )
+        )
+    if partition_on:
+        groups: dict[str, list[int]] = {}
+        keys = zip(*(table.column(k).to_pylist() for k in partition_on))
+        for i, values in enumerate(keys):
+            dirname = "/".join(
+                f"{escape_path_name(k)}={_hive_dir_value(v)}"
+                for k, v in zip(partition_on, values)
+            )
+            groups.setdefault(dirname, []).append(i)
+        data = table.drop_columns(list(partition_on))
+        parts = [(d, data.take(rows)) for d, rows in groups.items()]
+    else:
+        parts = [("", table)]
+    for dirname, part in parts:
+        buf = io.BytesIO()
+        # an empty file has no row group, like Spark's
+        with pq.ParquetWriter(
+            buf, part.schema, compression="snappy", store_schema=False
+        ) as writer:
+            if part.num_rows:
+                writer.write_table(part)
+        name = f"part-00000-{uuid.uuid4()}.c000.snappy{naming.PARQUET_SUFFIX}"
+        store.put_bytes(posixpath.join(staging, dirname, name), buf.getvalue())
 
 
 def _reader(spark: SparkSession, schema, base: str) -> DataFrameReader:

@@ -1213,3 +1213,36 @@ def test_pq_fit_on_sample_encodes_full_corpus(spark, emb, tmp_path):
         exact = {ids[i] for i in np.argsort(d)[:10]}
         recs.append(len(exact & set(got[q.query_id])) / 10)
     assert sum(recs) / len(recs) >= 0.8
+
+
+@pytest.mark.parametrize("sampled", [False, True], ids=["full_fit", "fit_on_sample"])
+def test_ivfpq_build_releases_pins_and_pool_when_fit_fails(
+    spark, emb, tmp_path, monkeypatch, sampled
+):
+    """A failing PQ fit must not leak the residual pin, the fit caches
+    or the 1-thread materialization pool."""
+    import threading
+
+    from plateau_spark.core.caching import release_shared_caches, shared_cache_count
+    from plateau_spark.operators import similarity
+
+    def failing_fit(*args, **kwargs):
+        raise RuntimeError("injected fit failure")
+
+    monkeypatch.setattr(similarity, "fit_pq_model", failing_fit)
+    release_shared_caches()  # frames earlier tests left in the registry
+    jsc = spark.sparkContext._jsc
+    pinned_before = jsc.getPersistentRDDs().size()
+    threads_before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="injected fit failure"):
+        similarity.build_ivfpq_index(
+            spark, str(tmp_path / "s"), "ix", emb, n_centroids=4, m=8, pq_k=16,
+            fit_corpus=emb.where("vec_id % 4 = 0") if sampled else None,
+        )
+    assert shared_cache_count() == 0
+    assert jsc.getPersistentRDDs().size() == pinned_before
+    leaked = [
+        t for t in set(threading.enumerate()) - threads_before
+        if t.name.startswith("ThreadPoolExecutor") and t.is_alive()
+    ]
+    assert leaked == []
